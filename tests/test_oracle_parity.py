@@ -70,3 +70,11 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     df = ALL[name](spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema) > 0
+
+
+def test_registry_views_are_registration_order():
+    """queries() is a plain view of REGISTRY, and oracle_sql() keeps
+    queries()' order over the keys that have an oracle."""
+    assert list(Q.queries()) == list(Q.REGISTRY)
+    qs, osql = list(Q.queries()), list(Q.oracle_sql())
+    assert osql == [k for k in qs if k in set(osql)]
